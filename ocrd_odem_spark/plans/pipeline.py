@@ -1,13 +1,16 @@
 """The end-to-end extraction plan (reference lifecycle §3.4 of SURVEY.md).
 
-Design: the whole extract path is a chain of NARROW per-document
-transformations over the nested ``spans`` array — sort, token post-process,
-empty-line drop, optional de-hyphenation fold, re-offset — all Catalyst
-higher-order functions inside one whole-stage-codegen span.  The only wide
-operation in the flagship plan is an optional broadcast join against the
-(small) page-blacklist dimension.  At 100 TB this means: zero shuffles of
-the fact table, linear scaling with input splits, and skew from oversized
-"book" documents bounded by single-row cost rather than hot shuffle keys.
+Design: the whole extract path is NARROW per-document work over the nested
+``spans`` array — sort, blacklist drop, RTL fold, token post-process,
+empty-line drop, optional de-hyphenation fold, re-offset.  The default tier
+(``extract_arrow``) runs all of it as ONE ``mapInArrow`` stage executing the
+oracle loops; the metadata dimensions (relevance filter, page blacklist)
+broadcast-join onto the fact table ahead of that stage.  The second tier
+(``mode="hof"``) states the same semantics as Catalyst higher-order array
+expressions, and the stage registry below composes those expressions.  At
+100 TB this means: zero shuffles of the fact table, linear scaling with
+input splits, and skew from oversized "book" documents bounded by
+single-row cost rather than hot shuffle keys.
 
 Stage order reproduces the reference (``ocr_files.py:62-91``): blacklist
 filters precede token ops; the trailing-punct split precedes the min-length
@@ -15,6 +18,9 @@ drop; de-hyphenation (quality path) runs on the post-processed lines.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -76,9 +82,45 @@ def postprocess_spans(spans: Column, rtl: Column | None = None) -> Column:
 
 
 def drop_blacklisted(spans: Column, blacklisted_refs: Column) -> Column:
-    """Remove every span of a blacklisted page (F3/F4 net effect)."""
+    """Remove every span of a blacklisted page (F3/F4 net effect).  A span
+    without a ``media_ref`` sits on no blacklisted page and stays."""
     refs = F.coalesce(blacklisted_refs, F.array().cast("array<string>"))
-    return F.filter(spans, lambda s: ~F.array_contains(refs, s["media_ref"]))
+    return F.filter(
+        spans,
+        lambda s: ~F.coalesce(F.array_contains(refs, s["media_ref"]), F.lit(False)),
+    )
+
+
+RTL_LANGS = ("ara", "heb", "fas")
+
+
+def join_metadata(
+    docs: DataFrame,
+    page_meta: DataFrame | None = None,
+    doc_meta: DataFrame | None = None,
+) -> DataFrame:
+    """Broadcast-join the metadata dimensions onto the fact table.
+
+    * ``doc_meta``: INNER join with ``relevance_filter`` (F1 drops the
+      irrelevant docs) adding the boolean ``_rtl`` — the doc's languages
+      overlap ``RTL_LANGS`` (NULL languages read as False).
+    * ``page_meta``: LEFT join with ``blacklisted_pages`` adding
+      ``_blacklisted_refs`` — NULL for a doc without a blacklisted page.
+
+    Both dimensions are per-doc small and broadcast: the fact table never
+    shuffles for them.
+    """
+    out = docs
+    if doc_meta is not None:
+        rtl = F.coalesce(
+            F.arrays_overlap("languages", F.array(*[F.lit(x) for x in RTL_LANGS])),
+            F.lit(False),
+        )
+        relevant = relevance_filter(doc_meta).select("doc_id", rtl.alias("_rtl"))
+        out = out.join(F.broadcast(relevant), "doc_id", "inner")
+    if page_meta is not None:
+        out = out.join(F.broadcast(blacklisted_pages(page_meta)), "doc_id", "left")
+    return out
 
 
 def extract(
@@ -87,18 +129,18 @@ def extract(
     doc_meta: DataFrame | None = None,
     dehyphenate: bool = False,
     with_metrics: bool = False,
-    mode: str = "hof",
+    mode: str = "arrow",
 ) -> DataFrame:
     """Full extraction plan: (doc_id, spans) -> (doc_id, spans[, metrics]).
 
     ``mode``:
-      * ``"hof"``   — pure-JVM higher-order expressions (zero Python, zero
-        shuffle; HOFs are CodegenFallback-interpreted).
-      * ``"arrow"`` — Arrow-batched ``mapInPandas`` executing the oracle
-        semantics directly (measured ~2.7x faster on the bench corpus; the
-        span payload crosses the Arrow boundary once each way).  Metrics
-        and metadata joins are only available in hof mode; both modes are
-        proven byte-identical in tests.
+      * ``"arrow"`` (default) — ``extract_arrow``: one ``mapInArrow`` stage
+        running the oracle loops over Arrow batches, metadata joins and
+        metrics included.
+      * ``"hof"`` — the same semantics as pure-JVM higher-order
+        expressions (zero Python, zero shuffle; HOFs are
+        CodegenFallback-interpreted).  Both tiers are proven span-for-span
+        identical in tests.
 
     * ``page_meta``: optional page dimension with ``label`` / ``log_types``;
       blacklisted pages (Colorchecker/Leerseite labels, cover_* log types)
@@ -108,31 +150,19 @@ def extract(
       PICA relevance filter (F1) are dropped; RTL language docs ('ara',
       'heb', 'fas') get the mark-strip + right-to-left line fold.
     * ``dehyphenate``: run the per-page wrap-merge fold (quality path T4).
+    * ``with_metrics``: add per-doc n_pages, n_lines_in (input text spans,
+      counted before the blacklist drop), n_lines_out, n_tokens_out and
+      n_dehyphenated.
     """
-    if mode == "arrow":
-        if page_meta is not None or doc_meta is not None:
-            raise ValueError("arrow mode supports the bare extract path only")
-        return extract_arrow(docs, dehyphenate=dehyphenate, with_metrics=with_metrics)
-    if mode != "hof":
+    if mode not in ("arrow", "hof"):
         raise ValueError(f"unknown mode {mode!r}")
-    out = docs
-    rtl_col = None
+    out = join_metadata(docs, page_meta, doc_meta)
+    if mode == "arrow":
+        return extract_arrow(out, dehyphenate=dehyphenate, with_metrics=with_metrics)
 
-    if doc_meta is not None:
-        relevant = relevance_filter(doc_meta).select(
-            "doc_id",
-            F.array_intersect(
-                F.col("languages"), F.array(F.lit("ara"), F.lit("heb"), F.lit("fas"))
-            ).alias("_rtl_langs"),
-        )
-        out = out.join(F.broadcast(relevant), "doc_id", "inner")
-        rtl_col = F.size("_rtl_langs") > 0
-
+    rtl_col = F.col("_rtl") if doc_meta is not None else None
     spans = sorted_spans(F.col("spans"))
-
     if page_meta is not None:
-        bl = blacklisted_pages(page_meta)
-        out = out.join(F.broadcast(bl), "doc_id", "left")
         spans = drop_blacklisted(spans, F.col("_blacklisted_refs"))
 
     spans = postprocess_spans(spans, rtl=rtl_col)
@@ -198,25 +228,33 @@ def extract_arrow(
     tier's metric columns — pages/lines/tokens out, input text lines, and
     the de-hyphenation merge count — value-identical to the hof
     expressions (pinned by ``test_r06_optimizations``).
+
+    Metadata: when ``docs`` carries the ``_rtl`` / ``_blacklisted_refs``
+    columns that ``join_metadata`` adds, each document drops the spans of
+    its blacklisted pages and, if RTL, folds its text lines right-to-left
+    after stripping directional marks — both read once per document, so
+    the bare path pays nothing for them.
     """
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..oracle import dehyphenate_lines, postprocess_line_tokens
+    from ..oracle import dehyphenate_lines, postprocess_line_tokens, strip_marks
 
-    def extract_doc(is_media, texts, refs, lo, hi):
+    meta_cols = [c for c in ("_rtl", "_blacklisted_refs") if c in docs.columns]
+    col_idx = {c: 2 + k for k, c in enumerate(meta_cols)}
+    rtl_idx, black_idx = col_idx.get("_rtl"), col_idx.get("_blacklisted_refs")
+
+    def extract_doc(is_media, texts, refs, span_ids):
         """Oracle loops for one document's spans at flat positions
-        [lo, hi), already offset-sorted (stable, matching the previous
+        ``span_ids``, already offset-sorted (stable, matching the previous
         ``sorted(spans, key=offset)``)."""
         out: list[tuple] = []
-        n_lines_in = 0
         n_merges = 0
-        for j in range(lo, hi):
+        for j in span_ids:
             if is_media[j]:
                 out.append(("media", texts[j], refs[j]))
                 continue
-            n_lines_in += 1
             toks = postprocess_line_tokens((texts[j] or "").split(" "))
             if toks:
                 out.append(("text", " ".join(toks), refs[j]))
@@ -246,7 +284,7 @@ def extract_arrow(
                     page_lines.append(row[1])
             n_merges += flush()
             out = merged
-        return out, n_lines_in, n_merges
+        return out, n_merges
 
     def run(batches):
         for batch in batches:
@@ -266,25 +304,41 @@ def extract_arrow(
             perm = pa.array(np.lexsort((offs, doc_idx)))
             texts = flat.field("text").take(perm).to_pylist()
             refs = flat.field("media_ref").take(perm).to_pylist()
+            media = pc.equal(flat.field("kind"), "media")
             # plain Python lists: per-span numpy scalar indexing in the hot
             # loop costs ~3x a list index
-            is_media = (
-                pc.equal(flat.field("kind"), "media").take(perm).to_pylist()
+            is_media = media.take(perm).to_pylist()
+            rtl = None if rtl_idx is None else batch.column(rtl_idx).to_pylist()
+            black = (
+                None if black_idx is None else batch.column(black_idx).to_pylist()
             )
             bounds = np.concatenate(([0], np.cumsum(lengths))).tolist()
             out_k: list[str] = []
             out_t: list = []
             out_r: list = []
             out_o: list[int] = []
+            # int32 list offsets (Spark's array type): one output batch holds
+            # at most 2**31 - 1 spans
             list_off = np.empty(n + 1, dtype=np.int32)
             list_off[0] = 0
-            metrics = (
-                np.empty((5, n), dtype=np.int64) if with_metrics else None
-            )
+            metrics = None
+            if with_metrics:
+                metrics = np.empty((5, n), dtype=np.int64)
+                # input text spans per doc, before any blacklist drop
+                not_media = ~media.fill_null(False).to_numpy(zero_copy_only=False)
+                metrics[1] = np.bincount(doc_idx[not_media], minlength=n)
             for i in range(n):
-                rows, n_lines_in, n_merges = extract_doc(
-                    is_media, texts, refs, bounds[i], bounds[i + 1]
-                )
+                span_ids = range(bounds[i], bounds[i + 1])
+                if black is not None and black[i]:
+                    dropped = set(black[i])
+                    span_ids = [j for j in span_ids if refs[j] not in dropped]
+                if rtl is not None and rtl[i]:
+                    for j in span_ids:
+                        if not is_media[j]:
+                            texts[j] = " ".join(
+                                reversed(strip_marks(texts[j] or "").split(" "))
+                            )
+                rows, n_merges = extract_doc(is_media, texts, refs, span_ids)
                 for o, (k, t, r) in enumerate(rows):
                     out_k.append(k)
                     out_t.append(t)
@@ -298,7 +352,6 @@ def extract_arrow(
                         row[1].count(" ") + 1 for row in rows if row[0] == "text"
                     )
                     metrics[0, i] = n_pages
-                    metrics[1, i] = n_lines_in
                     metrics[2, i] = len(rows) - n_pages
                     metrics[3, i] = n_tokens_out
                     metrics[4, i] = n_merges
@@ -330,15 +383,13 @@ def extract_arrow(
     span_t = (
         "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
     )
+    schema = f"doc_id string, spans {span_t}"
     if with_metrics:
-        schema = (
-            f"doc_id string, spans {span_t}, n_pages long, n_lines_in long, "
-            "n_lines_out long, n_tokens_out long, n_dehyphenated long"
+        schema += (
+            ", n_pages long, n_lines_in long, n_lines_out long, "
+            "n_tokens_out long, n_dehyphenated long"
         )
-        return docs.select("doc_id", "spans").mapInArrow(run, schema=schema)
-    return docs.select("doc_id", "spans").mapInArrow(
-        run, schema=f"doc_id string, spans {span_t}"
-    )
+    return docs.select("doc_id", "spans", *meta_cols).mapInArrow(run, schema=schema)
 
 
 def relevance_filter(doc_meta: DataFrame) -> DataFrame:
@@ -357,9 +408,8 @@ def page_blacklist_flag(
     """Boolean column: this page row hits the label or logical-type
     blacklist (substring on labels, exact membership on type lists —
     reference ``is_in``, ``mets.py:417-420``)."""
-    label_hit = F.exists(
-        F.array(*[F.lit(t) for t in label_tokens]),
-        lambda t: F.col("label").contains(t),
+    label_hit = functools.reduce(
+        operator.or_, [F.col("label").contains(t) for t in label_tokens]
     )
     type_hit = F.arrays_overlap(
         F.col("log_types"), F.array(*[F.lit(t) for t in type_tokens])

@@ -157,11 +157,18 @@ def export_documents(
 def materialize_zips(export_table: DataFrame, out_dir: str) -> int:
     """Delivery step: write each row's zip to ``out_dir`` (the export
     share).  Runs on the driver over a collected manifest ONLY when asked;
-    a production share-mount would instead ``foreachPartition`` this."""
+    a production share-mount would instead ``foreachPartition`` this.
+
+    The next partition's export job runs while the driver writes the
+    current one's files (``prefetchPartitions``): at most two partitions
+    sit on the driver at a time."""
     os.makedirs(out_dir, exist_ok=True)
     n = 0
     seen: set[str] = set()
-    for row in export_table.select("saf_name", "zip_bytes").toLocalIterator():
+    rows = export_table.select("saf_name", "zip_bytes").toLocalIterator(
+        prefetchPartitions=True
+    )
+    for row in rows:
         name = row["saf_name"]
         if os.sep in name or name.startswith(".") or ".." in name:
             raise ValueError(f"unsafe export artifact name {name!r}")

@@ -238,8 +238,11 @@ def _run_with_checkpoint_locked(
     fail_before_commit: bool = False,
 ) -> dict:
 
-    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     done = store.done_buckets(spark)
+    if set(range(n_buckets)) <= set(done):
+        # a finished run: no transform plan, no (empty) write job
+        return {"published": 0, "skipped": len(done), "run_id": run_id}
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
     pending_docs = docs.withColumn("_bucket", bucket)
     if done:
         pending_docs = pending_docs.where(~F.col("_bucket").isin(done))

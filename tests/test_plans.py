@@ -61,6 +61,53 @@ def test_blacklist_join_broadcasts(spark, docs_parquet, page_meta_df):
     assert "BroadcastExchange" in plan
 
 
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _node_names(node) -> list[str]:
+    """Every physical operator name in the (pre-execution) plan tree."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.initialPlan()
+    return [node.nodeName()] + [n for c in _children(node) for n in _node_names(c)]
+
+
+def _fact_path(node) -> list[str]:
+    """Operator names from the root down to the fact scan, taking the
+    streamed side of every broadcast join."""
+    names = []
+    while True:
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.initialPlan()
+        names.append(node.nodeName())
+        if node.nodeName() == "BroadcastHashJoin":
+            node = node.streamedPlan()
+        elif _children(node):
+            (node,) = _children(node)
+        else:
+            return names
+
+
+def test_metadata_extract_is_one_arrow_stage(spark, docs_parquet, page_meta_df, doc_meta_df):
+    """The metadata extract: both dimensions broadcast-join ahead of ONE
+    mapInArrow stage; the fact side never shuffles; no HOF lambda runs."""
+    docs = spark.read.parquet(docs_parquet)
+    out = pipeline.extract(
+        docs, page_meta=page_meta_df, doc_meta=doc_meta_df,
+        dehyphenate=True, with_metrics=True,
+    )
+    root = out._jdf.queryExecution().executedPlan()
+    names = _node_names(root)
+    assert names.count("MapInArrow") == 1, names
+    assert names.count("BroadcastHashJoin") == 2, names
+    assert names.count("BroadcastExchange") == 2, names
+    fact = _fact_path(root)
+    assert fact[0] == "MapInArrow" and fact[-1].startswith("Scan parquet"), fact
+    assert not [n for n in fact if "Exchange" in n], fact
+    assert "lambdafunction" not in _plan(out).lower()
+
+
 def test_relational_join_broadcasts_small_dims(spark):
     from ocrd_odem_spark.plans.queries import retired_relational
 

@@ -14,6 +14,30 @@ def _transform(df):
     return pipeline.extract(df, dehyphenate=True)
 
 
+def test_finished_resume_starts_no_spark_job(spark, docs_df):
+    """Resuming a finished run returns before planning: zero Spark jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    with tempfile.TemporaryDirectory() as tmp:
+        out_dir, st_dir = f"{tmp}/out", f"{tmp}/state"
+        try:
+            sc.setJobGroup("first-run", "checkpointed run")
+            first = state.run_with_checkpoint(
+                spark, docs_df, _transform, out_dir, st_dir, n_buckets=4
+            )
+            sc.setJobGroup("finished-resume", "resume of a finished run")
+            again = state.run_with_checkpoint(
+                spark, docs_df, _transform, out_dir, st_dir, n_buckets=4
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert first["published"] == 4
+        assert tracker.getJobIdsForGroup("first-run")  # the probe sees jobs
+        assert again["published"] == 0 and again["skipped"] == 4
+        assert tracker.getJobIdsForGroup("finished-resume") == []
+
+
 def test_crash_resume_no_dupes(spark, docs_df, corpus):
     with tempfile.TemporaryDirectory() as tmp:
         out_dir = f"{tmp}/out"
