@@ -7,8 +7,12 @@ larger sf by replicating an existing sf dir N times with disjoint key
 spaces:
 
 * int64 primary keys and their foreign-key references into replicated
-  tables get `key + copy * 10**12`, so joins stay 1:1-shaped (no
-  cross-copy fan-out) and every copy's keys are globally unique;
+  tables get `key + copy * 10**7` (`OFFSET`), so joins stay 1:1-shaped (no
+  cross-copy fan-out) and every copy's keys are globally unique; `doc_id`
+  gets `doc_id + copy * 10**5` (`DOC_OFFSET`, see below).  Both need every
+  source key below its offset, and the last copy's `doc_id` below 10**6;
+  the tool checks that before writing and refuses otherwise, since a key
+  past either bound silently collides with another copy's;
 * the tiny fixed dimensions (region, nation) are copied once, and the
   int32 nation/region FK columns are left untouched so those joins keep
   their original fan-in;
@@ -52,7 +56,26 @@ REMAP = {
 # id within 6 digits or whole copies collapse into a few monster docs
 # (first probe run did exactly that: 9 docs of 5000x normal size).
 DOC_OFFSET = 10**5
+DOC_ID_BOUND = 10**6  # lpad(6) keeps six digits
 SINGLETON = {"region", "nation"}
+
+
+def check_key_space(t: pa.Table, name: str, copies: int) -> None:
+    """Refuse a replica whose remapped keys would collide across copies."""
+    for col in REMAP.get(name, ()):
+        off = DOC_OFFSET if col == "doc_id" else OFFSET
+        lo, hi = pc.min_max(t.column(col)).values()
+        if hi.as_py() is None:
+            continue
+        if lo.as_py() < 0 or hi.as_py() >= off:
+            raise ValueError(
+                f"{name}.{col} spans [{lo}, {hi}], outside [0, {off}): copies would collide"
+            )
+        if col == "doc_id" and hi.as_py() + (copies - 1) * DOC_OFFSET >= DOC_ID_BOUND:
+            raise ValueError(
+                f"{name}.doc_id {hi} + {copies - 1} * {DOC_OFFSET} reaches "
+                f"{DOC_ID_BOUND}: lpad(6) would truncate it into another doc's key"
+            )
 
 
 def scale_table(src: str, dst: str, name: str, copies: int) -> int:
@@ -80,11 +103,13 @@ def scale_table(src: str, dst: str, name: str, copies: int) -> int:
 def main() -> None:
     src_dir, dst_dir = sys.argv[1], sys.argv[2]
     copies = int(sys.argv[3]) if len(sys.argv) > 3 else 10
+    names = sorted(f[: -len(".parquet")] for f in os.listdir(src_dir) if f.endswith(".parquet"))
+    for name in names:  # every table passes before any is written
+        keys = pq.read_table(os.path.join(src_dir, f"{name}.parquet"), columns=REMAP.get(name, []))
+        check_key_space(keys, name, copies)
     os.makedirs(dst_dir, exist_ok=True)
-    for f in sorted(os.listdir(src_dir)):
-        if not f.endswith(".parquet"):
-            continue
-        name = f[: -len(".parquet")]
+    for name in names:
+        f = f"{name}.parquet"
         n = scale_table(os.path.join(src_dir, f), os.path.join(dst_dir, f), name, copies)
         print(f"{name}: {n} rows")
 

@@ -10,6 +10,11 @@ Usage:
   python bench_extra.py --queries q46 --plan       # also write plans/r06/
   python bench_extra.py --queries all --repeat 2
   python bench_extra.py --flagship-arrow           # flagship arrow isolation
+
+Every run's JSON also carries `worker.invalidate_caches_ms`: the median time
+of one `importlib.invalidate_caches()` call inside a Python worker task (one
+task per core), the per-task import-cache reset PySpark makes before any UDF
+code runs (see `ocrd_odem_spark/worker_daemon.py`).
 """
 
 from __future__ import annotations
@@ -66,6 +71,26 @@ def checksum(df) -> None:
     df.select(F.expr("bit_xor(xxhash64(struct(*)))").alias("h")).collect()
 
 
+def invalidate_caches_ms(spark, cores: int) -> float:
+    """Median ms of one ``importlib.invalidate_caches()`` in a worker task."""
+    import statistics
+
+    def probe(batches):
+        import importlib
+
+        import pyarrow as pa
+
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        ms = (time.perf_counter() - t0) * 1e3
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([{"ms": ms}])
+
+    rows = spark.range(cores, numPartitions=cores).mapInArrow(probe, "ms double").collect()
+    return round(statistics.median(r["ms"] for r in rows), 3)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", default="")
@@ -86,7 +111,11 @@ def main() -> None:
     spark = _session(args.cores)
     spark.sparkContext.setLogLevel("ERROR")
 
-    out: dict = {"sf_dir": sf_dir, "force": args.force}
+    out: dict = {
+        "sf_dir": sf_dir,
+        "force": args.force,
+        "worker.invalidate_caches_ms": invalidate_caches_ms(spark, args.cores),
+    }
 
     if args.flagship_arrow or args.flagship_hof:
         import bench

@@ -3,6 +3,18 @@
 Sized for the sandbox (single JVM, local[N]) but every knob is the one you
 would set on a 1000-executor cluster: AQE with skew-join handling, Arrow for
 any pandas-UDF exchange, shuffle partitions matched to parallelism.
+
+The Python workers start from ``ocrd_odem_spark.worker_daemon``
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``.  PySpark
+calls ``importlib.invalidate_caches()`` at the start of every task, and on
+Python 3.11 that makes every ``zipimporter`` on the worker's path re-read its
+archive's whole central directory: pyspark.zip, the py4j zip and the
+spark-core jar, sixteen reads and about 240 ms per task on a 4-vCPU host,
+against well under a millisecond for an identity function.  The engine's
+daemon re-reads an archive only when its stat changed, which leaves import
+semantics as they are (a new ``--py-files`` archive is a new path entry) and
+cuts the fixed cost of every Python stage: the Arrow extract, the metadata
+extract and the dedup walks.
 """
 
 from __future__ import annotations
@@ -46,6 +58,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "ocrd_odem_spark.worker_daemon")
     )
     # JVM tuning hook (e.g. GC choice) — local mode runs everything in the
     # driver JVM, so driver options govern executor threads too
