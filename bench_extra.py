@@ -11,10 +11,12 @@ Usage:
   python bench_extra.py --queries all --repeat 2
   python bench_extra.py --flagship-arrow           # flagship arrow isolation
 
-Every run's JSON also carries `worker.invalidate_caches_ms`: the median time
-of one `importlib.invalidate_caches()` call inside a Python worker task (one
-task per core), the per-task import-cache reset PySpark makes before any UDF
-code runs (see `ocrd_odem_spark/worker_daemon.py`).
+Every run's JSON also carries two per-task worker costs, each the median over
+one task per core of one Spark job (see `ocrd_odem_spark/worker_daemon.py`):
+`worker.invalidate_caches_ms`, one `importlib.invalidate_caches()` call, the
+import-cache reset PySpark makes before any UDF code runs, and
+`worker.gc_collect_ms`, one `gc.collect()`, the collection the daemon runs in
+each reused worker after every task.
 """
 
 from __future__ import annotations
@@ -71,24 +73,35 @@ def checksum(df) -> None:
     df.select(F.expr("bit_xor(xxhash64(struct(*)))").alias("h")).collect()
 
 
-def invalidate_caches_ms(spark, cores: int) -> float:
-    """Median ms of one ``importlib.invalidate_caches()`` in a worker task."""
+def worker_costs(spark, cores: int) -> dict:
+    """Median ms of one ``importlib.invalidate_caches()`` and one
+    ``gc.collect()`` in a worker task, one task per core."""
     import statistics
 
     def probe(batches):
+        import gc
         import importlib
 
         import pyarrow as pa
 
         t0 = time.perf_counter()
         importlib.invalidate_caches()
-        ms = (time.perf_counter() - t0) * 1e3
+        t1 = time.perf_counter()
+        gc.collect()
+        t2 = time.perf_counter()
         for _ in batches:
             pass
-        yield pa.RecordBatch.from_pylist([{"ms": ms}])
+        yield pa.RecordBatch.from_pylist([{"reset": (t1 - t0) * 1e3, "gc": (t2 - t1) * 1e3}])
 
-    rows = spark.range(cores, numPartitions=cores).mapInArrow(probe, "ms double").collect()
-    return round(statistics.median(r["ms"] for r in rows), 3)
+    rows = (
+        spark.range(cores, numPartitions=cores)
+        .mapInArrow(probe, "reset double, gc double")
+        .collect()
+    )
+    return {
+        "worker.invalidate_caches_ms": round(statistics.median(r["reset"] for r in rows), 3),
+        "worker.gc_collect_ms": round(statistics.median(r["gc"] for r in rows), 3),
+    }
 
 
 def main() -> None:
@@ -101,11 +114,15 @@ def main() -> None:
     ap.add_argument("--flagship-arrow", action="store_true")
     ap.add_argument("--flagship-hof", action="store_true")
     ap.add_argument("--replicate", type=int, default=int(os.environ.get("SPARK_GRAFT_REPLICATE", "48")))
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument(
+        "--cores",
+        type=int,
+        default=int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))),
+    )
     args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "32g")
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     os.environ.setdefault("SPARK_GRAFT_JAVA_OPTS", "-XX:+UseParallelGC")
 
     spark = _session(args.cores)
@@ -114,7 +131,7 @@ def main() -> None:
     out: dict = {
         "sf_dir": sf_dir,
         "force": args.force,
-        "worker.invalidate_caches_ms": invalidate_caches_ms(spark, args.cores),
+        **worker_costs(spark, args.cores),
     }
 
     if args.flagship_arrow or args.flagship_hof:

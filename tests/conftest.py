@@ -15,6 +15,8 @@ SEED = 42
 def spark():
     session = get_spark("ocrd-odem-spark-tests", cores=4, shuffle_partitions=8)
     yield session
+    # removes the driver's Unix-domain socket file from java.io.tmpdir
+    session.stop()
 
 
 @pytest.fixture(scope="session")
