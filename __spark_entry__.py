@@ -23,12 +23,11 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extract + de-hyphenation over the derived interleaved
     span corpus at sf0.001 (narrow, shuffle-free fact-table plan).
 
-    r6: the arrow tier is the production default (VERDICT r5 item 2) —
-    byte-identical to the hof tier (dual-mode equality tests) and ~10x
-    faster on the hot path; the hof tier remains for metadata joins and
-    the N-vs-4N scaling probe."""
+    Runs ``pipeline.extract``'s default Arrow tier (columnar kernels in one
+    ``mapInArrow`` stage); the hof tier remains for the N-vs-4N scaling
+    probe."""
     docs = _q.docs_nested_df(spark, "/root/testdata/sf0.001")
-    out = pipeline.extract(docs, dehyphenate=True, mode="arrow")
+    out = pipeline.extract(docs, dehyphenate=True)
     return pipeline.to_flat(out.select("doc_id", "spans"))
 
 

@@ -17,6 +17,15 @@ one task per core of one Spark job (see `ocrd_odem_spark/worker_daemon.py`):
 import-cache reset PySpark makes before any UDF code runs, and
 `worker.gc_collect_ms`, one `gc.collect()`, the collection the daemon runs in
 each reused worker after every task.
+
+It also carries `pipeline.extract_worker_cpu_s`: the summed
+`time.process_time()` spent inside the extract stage's Arrow function (its
+input batches' reads included) over all tasks of one noop-sink run of the
+flagship stage, `extract_arrow(dehyphenate=True)` over the benchmark's
+`extract-flagship` input at seed 1 (2,400 docs in 32 splits, built or reused
+under `.perfbench-cache/`).  The timer wraps the function here, through the
+DataFrame class's `mapInArrow` while the plan is built; the engine itself
+carries no timer.
 """
 
 from __future__ import annotations
@@ -29,7 +38,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-PLAN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
+ROOT = os.path.dirname(os.path.abspath(__file__))
+PLAN_DIR = os.path.join(ROOT, "plans", "r06")
 
 
 def _steal_ticks() -> int:
@@ -104,6 +114,48 @@ def worker_costs(spark, cores: int) -> dict:
     }
 
 
+def extract_worker_cpu(spark) -> dict:
+    """Summed worker CPU seconds of the flagship extract function in one
+    run of its stage (the second of two; the first warms the workers)."""
+    from ocrd_odem_spark.plans import pipeline
+
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    import inputs
+
+    manifest = inputs.prepare("extract-flagship", 1, os.path.join(ROOT, ".perfbench-cache"))
+    docs = spark.read.parquet(manifest["paths"]["docs"])
+    spent = spark.sparkContext.accumulator(0.0)
+    frame = type(docs)  # the session's concrete DataFrame class
+    map_in_arrow = frame.mapInArrow
+
+    def timed(self, func, schema, *args, **kwargs):
+        def wrapped(batches):
+            out = iter(func(batches))
+            cpu = 0.0
+            while True:
+                t0 = time.process_time()
+                try:
+                    batch = next(out)
+                except StopIteration:
+                    break
+                finally:
+                    cpu += time.process_time() - t0
+                yield batch
+            spent.add(cpu)
+
+        return map_in_arrow(self, wrapped, schema, *args, **kwargs)
+
+    frame.mapInArrow = timed
+    try:
+        stage = pipeline.extract_arrow(docs, dehyphenate=True)
+    finally:
+        frame.mapInArrow = map_in_arrow
+    noop(stage)
+    spent.value = 0.0
+    noop(stage)
+    return {"pipeline.extract_worker_cpu_s": round(spent.value, 3)}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", default="")
@@ -132,6 +184,7 @@ def main() -> None:
         "sf_dir": sf_dir,
         "force": args.force,
         **worker_costs(spark, args.cores),
+        **extract_worker_cpu(spark),
     }
 
     if args.flagship_arrow or args.flagship_hof:

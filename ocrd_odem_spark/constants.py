@@ -32,6 +32,16 @@ DOUBLE_OBLIQUE_HYPHEN = "⸗"
 #: punctuation set of the extract path (fully-punctuated drop + trailing split)
 ODEM_PUNCTUATIONS: str = string.punctuation + EM_DASH + DOUBLE_OBLIQUE_HYPHEN
 
+#: every code point Python's ``str.isspace`` accepts — the characters
+#: ``str.strip()`` / ``str.split()`` cut at, written out so the columnar
+#: extract can trim with the same set (pinned over all code points by
+#: ``tests/test_constants.py``)
+PY_WHITESPACE: str = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    + "".join(chr(c) for c in range(0x2000, 0x200B))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+
 #: minimum surviving token length (reference MINIMUM_WORD_LEN)
 MINIMUM_WORD_LEN: int = 2
 

@@ -59,8 +59,9 @@ _WIDE_SET = frozenset(PUNCTUATIONS)
 _BAD_SET = frozenset(BAD_CHARS_SANITIZE)
 _MARK_SET = frozenset(CLEAR_MARKS)
 #: delete-map form of _ODEM_SET for str.translate — C-speed "is the token
-#: punctuation-only" check (r6: this loop is the arrow extract tier's hot
-#: path, and per-char set membership in Python was 40% of it)
+#: punctuation-only" check (per-char set membership in Python was 40% of
+#: this loop; ``run_pipeline_arrow``'s postprocess stage still runs it per
+#: token, while the extract stage has its own columnar statement)
 _ODEM_DEL = {ord(c): None for c in ODEM_PUNCTUATIONS}
 
 
@@ -87,7 +88,8 @@ def postprocess_line_tokens(tokens: list[str]) -> list[str]:
     # r6 note: flattened form of the original branch ladder — after the
     # fully-punctuated drop the stripped token is guaranteed non-empty, so
     # the `len(stripped) > 0` guards collapse; behaviour is unchanged
-    # (pinned by the oracle-parity and dual-mode tests).
+    # (pinned by the oracle-parity tests against the columnar Arrow tier,
+    # an independent statement of the same rules).
     out: list[str] = []
     append = out.append
     odem = _ODEM_SET

@@ -3,14 +3,16 @@
 Design: the whole extract path is NARROW per-document work over the nested
 ``spans`` array — sort, blacklist drop, RTL fold, token post-process,
 empty-line drop, optional de-hyphenation fold, re-offset.  The default tier
-(``extract_arrow``) runs all of it as ONE ``mapInArrow`` stage executing the
-oracle loops; the metadata dimensions (relevance filter, page blacklist)
-broadcast-join onto the fact table ahead of that stage.  The second tier
-(``mode="hof"``) states the same semantics as Catalyst higher-order array
-expressions, and the stage registry below composes those expressions.  At
-100 TB this means: zero shuffles of the fact table, linear scaling with
-input splits, and skew from oversized "book" documents bounded by
-single-row cost rather than hot shuffle keys.
+(``extract_arrow``) runs all of it as ONE ``mapInArrow`` stage of columnar
+``pyarrow.compute`` / numpy kernels over whole Arrow batches (only the
+de-hyphenation wrap chains run as Python string operations); the metadata
+dimensions (relevance filter, page blacklist) broadcast-join onto the fact
+table ahead of that stage.  The second tier (``mode="hof"``) states the
+same semantics as Catalyst higher-order array expressions, and the stage
+registry below composes those expressions.  At 100 TB this means: zero
+shuffles of the fact table, linear scaling with input splits, and skew
+from oversized "book" documents bounded by single-row cost rather than hot
+shuffle keys.
 
 Stage order reproduces the reference (``ocr_files.py:62-91``): blacklist
 filters precede token ops; the trailing-punct split precedes the min-length
@@ -22,8 +24,12 @@ from __future__ import annotations
 import functools
 import operator
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..constants import CLEAR_MARKS, MINIMUM_WORD_LEN, ODEM_PUNCTUATIONS, PY_WHITESPACE
 from ..operators.dehyphen import dehyphenate_spans
 from ..operators.tokens import postprocess_line, reversed_line, strip_marks
 
@@ -135,7 +141,7 @@ def extract(
 
     ``mode``:
       * ``"arrow"`` (default) — ``extract_arrow``: one ``mapInArrow`` stage
-        running the oracle loops over Arrow batches, metadata joins and
+        of columnar kernels over whole Arrow batches, metadata joins and
         metrics included.
       * ``"hof"`` — the same semantics as pure-JVM higher-order
         expressions (zero Python, zero shuffle; HOFs are
@@ -202,194 +208,314 @@ def extract(
 def extract_arrow(
     docs: DataFrame, dehyphenate: bool = False, with_metrics: bool = False
 ) -> DataFrame:
-    """Arrow-batched extraction: ``mapInArrow`` running the exact oracle
-    loops per document over flat columnar buffers.
+    """Arrow-batched extraction: one ``mapInArrow`` stage that runs the
+    extract semantics as columnar kernels over each whole Arrow batch.
 
     Why this exists alongside the HOF plan: Spark's higher-order array
     functions are CodegenFallback (interpreted, per-element object churn),
-    while this path moves each Arrow batch into Python once and runs plain
-    tight loops.  It is still narrow (no shuffle), still per-partition
+    while this path hands each batch's ``list<struct>`` column to Python
+    once, flat.  It is still narrow (no shuffle), still per-partition
     parallel, and the payload crosses the Arrow boundary exactly twice.
 
-    r6.2 boundary rewrite (guide §4.2): the earlier ``mapInPandas`` form
-    paid one Python dict per SPAN on the way in (pyarrow's
-    list<struct>→pandas conversion) and one tuple per span on the way out —
-    at the driver's sf1.0 that is ~240 M dict/tuple constructions around
-    ~6 s of real loop work.  ``mapInArrow`` hands us the list<struct>
-    column directly: the per-doc offset sort collapses to ONE stable
-    ``np.lexsort`` per batch, field access is flat-array indexing, and the
-    output list<struct> is assembled from four flat arrays + a lengths
-    vector (`pa.ListArray.from_arrays`).  The per-document loop itself is
-    unchanged oracle semantics (``postprocess_line_tokens`` /
-    ``dehyphenate_lines``), proven identical by the dual-mode equality
-    tests and the seed-sweep oracle invariant.
+    A batch is processed with ``pyarrow.compute`` string kernels and numpy
+    index arithmetic (``_extract_batch``), never with a per-document or
+    per-token Python loop:
 
-    ``with_metrics`` (r6): the same per-document loop also counts the hof
-    tier's metric columns — pages/lines/tokens out, input text lines, and
-    the de-hyphenation merge count — value-identical to the hof
-    expressions (pinned by ``test_r06_optimizations``).
+    * one stable ``np.lexsort`` orders every document's spans by offset;
+    * a line whose " "-tokens all have two or more characters and no
+      whitespace or ODEM punctuation is left as it is (one RE2 match);
+      every other line is split on " ", its tokens are classified with
+      trim / length / slice kernels (``_postprocess_lines``) and re-joined,
+      and a line with no kept token is dropped;
+    * de-hyphenation finds the '-'-ended lines that have a successor on
+      the same page with array masks; only those wrap chains run as Python
+      string operations (``_dehyphenate``);
+    * offsets, list offsets, the kind column and the metrics come from
+      ``bincount`` / ``cumsum``.
+
+    The result equals the pure-Python ``oracle`` span for span (an
+    independent statement of the same semantics, not called here), which
+    the parity tests pin over seeded and adversarial corpora.
+
+    ``with_metrics``: pages/lines/tokens out, input text lines (counted
+    before the blacklist drop) and the de-hyphenation merge count —
+    value-identical to the HOF tier's metric expressions.
 
     Metadata: when ``docs`` carries the ``_rtl`` / ``_blacklisted_refs``
-    columns that ``join_metadata`` adds, each document drops the spans of
-    its blacklisted pages and, if RTL, folds its text lines right-to-left
-    after stripping directional marks — both read once per document, so
-    the bare path pays nothing for them.
+    columns that ``join_metadata`` adds, the spans of a document's
+    blacklisted pages are dropped (a span without a ``media_ref`` sits on
+    no page and stays) and an RTL document's text lines lose their
+    directional marks and have their " "-tokens reversed before the token
+    pass.
     """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from ..oracle import dehyphenate_lines, postprocess_line_tokens, strip_marks
-
     meta_cols = [c for c in ("_rtl", "_blacklisted_refs") if c in docs.columns]
     col_idx = {c: 2 + k for k, c in enumerate(meta_cols)}
     rtl_idx, black_idx = col_idx.get("_rtl"), col_idx.get("_blacklisted_refs")
 
-    def extract_doc(is_media, texts, refs, span_ids):
-        """Oracle loops for one document's spans at flat positions
-        ``span_ids``, already offset-sorted (stable, matching the previous
-        ``sorted(spans, key=offset)``)."""
-        out: list[tuple] = []
-        n_merges = 0
-        for j in span_ids:
-            if is_media[j]:
-                out.append(("media", texts[j], refs[j]))
-                continue
-            toks = postprocess_line_tokens((texts[j] or "").split(" "))
-            if toks:
-                out.append(("text", " ".join(toks), refs[j]))
-        if dehyphenate:
-            merged: list[tuple] = []
-            page_lines: list[str] = []
-            page_ref: str | None = None
-
-            def flush() -> int:
-                n = 0
-                if page_lines:
-                    lines, n = dehyphenate_lines(page_lines)
-                    for text in lines:
-                        merged.append(("text", text, page_ref))
-                    page_lines.clear()
-                return n
-
-            for row in out:
-                if row[0] == "media":
-                    n_merges += flush()
-                    page_ref = row[2]
-                    merged.append(row)
-                else:
-                    if row[2] != page_ref:
-                        n_merges += flush()
-                        page_ref = row[2]
-                    page_lines.append(row[1])
-            n_merges += flush()
-            out = merged
-        return out, n_merges
-
     def run(batches):
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            doc_ids = batch.column(0)
-            spans_col = batch.column(1)
-            lengths = pc.list_value_length(spans_col)
-            lengths = (
-                lengths.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            flat = spans_col.flatten()
-            offs = flat.field("offset").to_numpy(zero_copy_only=False)
-            doc_idx = np.repeat(np.arange(n, dtype=np.int64), lengths)
-            # one stable sort for the whole batch == per-doc sorted(key=offset)
-            perm = pa.array(np.lexsort((offs, doc_idx)))
-            texts = flat.field("text").take(perm).to_pylist()
-            refs = flat.field("media_ref").take(perm).to_pylist()
-            media = pc.equal(flat.field("kind"), "media")
-            # plain Python lists: per-span numpy scalar indexing in the hot
-            # loop costs ~3x a list index
-            is_media = media.take(perm).to_pylist()
-            rtl = None if rtl_idx is None else batch.column(rtl_idx).to_pylist()
-            black = (
-                None if black_idx is None else batch.column(black_idx).to_pylist()
-            )
-            bounds = np.concatenate(([0], np.cumsum(lengths))).tolist()
-            out_k: list[str] = []
-            out_t: list = []
-            out_r: list = []
-            out_o: list[int] = []
-            # int32 list offsets (Spark's array type): one output batch holds
-            # at most 2**31 - 1 spans
-            list_off = np.empty(n + 1, dtype=np.int32)
-            list_off[0] = 0
-            metrics = None
-            if with_metrics:
-                metrics = np.empty((5, n), dtype=np.int64)
-                # input text spans per doc, before any blacklist drop
-                not_media = ~media.fill_null(False).to_numpy(zero_copy_only=False)
-                metrics[1] = np.bincount(doc_idx[not_media], minlength=n)
-            for i in range(n):
-                span_ids = range(bounds[i], bounds[i + 1])
-                if black is not None and black[i]:
-                    dropped = set(black[i])
-                    span_ids = [j for j in span_ids if refs[j] not in dropped]
-                if rtl is not None and rtl[i]:
-                    for j in span_ids:
-                        if not is_media[j]:
-                            texts[j] = " ".join(
-                                reversed(strip_marks(texts[j] or "").split(" "))
-                            )
-                rows, n_merges = extract_doc(is_media, texts, refs, span_ids)
-                for o, (k, t, r) in enumerate(rows):
-                    out_k.append(k)
-                    out_t.append(t)
-                    out_r.append(r)
-                    out_o.append(o)
-                list_off[i + 1] = len(out_k)
-                if metrics is not None:
-                    n_pages = sum(1 for row in rows if row[0] == "media")
-                    # split(' ') semantics: n_tokens = count(' ') + 1/line
-                    n_tokens_out = sum(
-                        row[1].count(" ") + 1 for row in rows if row[0] == "text"
-                    )
-                    metrics[0, i] = n_pages
-                    metrics[2, i] = len(rows) - n_pages
-                    metrics[3, i] = n_tokens_out
-                    metrics[4, i] = n_merges
-            struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(out_k, pa.string()),
-                    pa.array(out_t, pa.string()),
-                    pa.array(out_r, pa.string()),
-                    pa.array(out_o, pa.int32()),
-                ],
-                names=["kind", "text", "media_ref", "offset"],
-            )
-            spans_out = pa.ListArray.from_arrays(
-                pa.array(list_off, pa.int32()), struct
-            )
-            cols = [doc_ids, spans_out]
-            names = ["doc_id", "spans"]
-            if metrics is not None:
-                cols += [pa.array(metrics[m]) for m in range(5)]
-                names += [
-                    "n_pages",
-                    "n_lines_in",
-                    "n_lines_out",
-                    "n_tokens_out",
-                    "n_dehyphenated",
-                ]
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            if batch.num_rows:
+                yield _extract_batch(
+                    batch, rtl_idx, black_idx, dehyphenate, with_metrics
+                )
 
-    span_t = (
-        "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    schema = (
+        "doc_id string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
     )
-    schema = f"doc_id string, spans {span_t}"
     if with_metrics:
-        schema += (
-            ", n_pages long, n_lines_in long, n_lines_out long, "
-            "n_tokens_out long, n_dehyphenated long"
-        )
+        schema += "".join(f", {c} long" for c in _METRICS)
     return docs.select("doc_id", "spans", *meta_cols).mapInArrow(run, schema=schema)
+
+
+def _char_class(chars: str) -> str:
+    """RE2 class body matching exactly ``chars`` (code point escapes)."""
+    return "".join(f"\\x{{{ord(c):x}}}" for c in chars)
+
+
+#: a token post-processing cannot change: >= 2 characters, no whitespace,
+#: no ODEM punctuation (so never dropped, split or length-filtered)
+_CLEAN_TOKEN = f"[^{_char_class(PY_WHITESPACE + ODEM_PUNCTUATIONS)}]{{2,}}"
+#: a line whose every " "-token is clean comes out of the token pass as is
+_CLEAN_LINE = f"^{_CLEAN_TOKEN}( {_CLEAN_TOKEN})*$"
+_MARKS = f"[{_char_class(CLEAR_MARKS)}]"
+
+_METRICS = ("n_pages", "n_lines_in", "n_lines_out", "n_tokens_out", "n_dehyphenated")
+
+
+def _np(arr) -> np.ndarray:
+    return arr.to_numpy(zero_copy_only=False)
+
+
+def _extract_batch(batch, rtl_idx, black_idx, dehyphenate, with_metrics):
+    """Extract one Arrow batch of ``(doc_id, spans[, _rtl][, _blacklisted_refs])``."""
+    n = batch.num_rows
+    spans = batch.column(1)
+    lengths = _np(pc.list_value_length(spans).fill_null(0)).astype(np.int64)
+    doc = np.repeat(np.arange(n, dtype=np.int64), lengths)
+    flat = spans.flatten()
+    texts = flat.field("text")
+    refs = flat.field("media_ref")
+    media = _np(pc.equal(flat.field("kind"), "media").fill_null(False))
+    # flat positions in output order: one stable sort for the whole batch ==
+    # per-doc sorted(key=offset); doc is sorted already, so doc[order] == doc
+    order = np.lexsort((_np(flat.field("offset")), doc))
+    if black_idx is not None:
+        on_black = _on_blacklisted_page(batch.column(black_idx), refs, doc, n)
+        order = order[~on_black[order]]
+
+    line_pos = order[~media[order]]
+    lines = texts.take(line_pos).fill_null("")
+    if rtl_idx is not None:
+        rtl = _np(batch.column(rtl_idx).fill_null(False))[doc[line_pos]]
+        if rtl.any():
+            lines = pc.replace_with_mask(
+                lines, pa.array(rtl), _fold_rtl(lines.filter(pa.array(rtl)))
+            )
+    lines, line_kept = _postprocess_lines(lines)
+
+    # output spans: media spans as they are, kept lines post-processed; the
+    # text pool holds the input texts, then the post-processed lines
+    src = order.copy()
+    is_line = ~media[order]
+    src[is_line] = len(flat) + np.arange(len(line_pos))
+    out_keep = ~is_line
+    out_keep[is_line] = line_kept
+    pos = order[out_keep]
+    src = src[out_keep]
+    out_media = media[pos]
+    out_doc = doc[pos]
+    out_refs = refs.take(pos)
+    out_text = pa.concat_arrays([texts, lines]).take(src)
+    merges = np.zeros(n, dtype=np.int64)
+    if dehyphenate:
+        out_text, keep, merged_at = _dehyphenate(out_text, out_media, out_refs, out_doc)
+        merges = np.bincount(out_doc[merged_at], minlength=n)
+        if keep is not None:
+            out_media, out_doc = out_media[keep], out_doc[keep]
+            out_refs = out_refs.filter(pa.array(keep))
+
+    # int32 list offsets (Spark's array type): one output batch holds at
+    # most 2**31 - 1 spans
+    per_doc = np.bincount(out_doc, minlength=n)
+    list_off = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(per_doc, out=list_off[1:])
+    offset = np.arange(len(out_doc), dtype=np.int32) - list_off[out_doc]
+    struct = pa.StructArray.from_arrays(
+        [
+            pc.if_else(pa.array(out_media), "media", "text"),
+            out_text,
+            out_refs,
+            pa.array(offset, pa.int32()),
+        ],
+        names=list(SPAN_FIELDS),
+    )
+    cols = [batch.column(0), pa.ListArray.from_arrays(pa.array(list_off), struct)]
+    names = ["doc_id", "spans"]
+    if with_metrics:
+        text_doc = out_doc[~out_media]
+        # split(' ') semantics: a line has count(' ') + 1 tokens
+        n_tokens = _np(pc.count_substring(out_text.filter(pa.array(~out_media)), " ")) + 1
+        n_lines_out = np.bincount(text_doc, minlength=n)
+        cols += [
+            pa.array(per_doc - n_lines_out),
+            pa.array(np.bincount(doc[~media], minlength=n)),
+            pa.array(n_lines_out),
+            pa.array(np.bincount(text_doc, weights=n_tokens, minlength=n).astype(np.int64)),
+            pa.array(merges),
+        ]
+        names += _METRICS
+    return pa.RecordBatch.from_arrays(cols, names=names)
+
+
+def _on_blacklisted_page(black, refs, doc, n: int) -> np.ndarray:
+    """Per flat span: its document lists its ``media_ref`` as blacklisted.
+    A NULL ``media_ref`` is on no page; a NULL list blacklists nothing."""
+    counts = _np(pc.list_value_length(black).fill_null(0)).astype(np.int64)
+    if not counts.any():
+        return np.zeros(len(doc), dtype=bool)
+    listed = black.flatten()
+    names = pc.drop_null(pc.unique(listed))
+    # (doc, ref) pairs as one integer key: doc * K + the ref's rank in names
+    k = len(names) + 1
+    span_code = _np(pc.index_in(refs, value_set=names).fill_null(-1)).astype(np.int64)
+    listed_code = _np(pc.index_in(listed, value_set=names).fill_null(-1)).astype(np.int64)
+    listed_doc = np.repeat(np.arange(n, dtype=np.int64), counts)
+    listed_key = (listed_doc * k + listed_code)[listed_code >= 0]
+    return (span_code >= 0) & np.isin(doc * k + span_code, listed_key)
+
+
+def _fold_rtl(lines):
+    """Right-to-left fold of each line: directional marks stripped, then
+    its " "-tokens reversed (``" ".join(reversed(line.split(" ")))``)."""
+    toks = pc.split_pattern(pc.replace_substring_regex(lines, _MARKS, ""), " ")
+    off = _np(toks.offsets).astype(np.int64)  # a kernel's output: starts at 0
+    line = np.repeat(np.arange(len(toks)), np.diff(off))
+    rev = off[line] + off[line + 1] - 1 - np.arange(off[-1])
+    folded = pa.ListArray.from_arrays(toks.offsets, toks.flatten().take(rev))
+    return pc.binary_join(folded, " ")
+
+
+def _postprocess_lines(lines):
+    """Token post-processing of every (non-NULL) line, columnar.
+
+    Per " "-token, with ``stripped`` its Python-whitespace trim:
+      1. all of ``stripped`` is ODEM punctuation (or it is empty) -> dropped;
+      2. else, a token of two or more characters ending in ODEM punctuation
+         is split: the rest (kept when >= MINIMUM_WORD_LEN characters),
+         then the punctuation character (always kept);
+      3. else the raw token is kept when ``stripped`` has >=
+         MINIMUM_WORD_LEN characters.
+    Returns the re-joined lines and, per line, whether any token was kept.
+    """
+    kept = np.ones(len(lines), dtype=bool)
+    dirty = np.flatnonzero(~_np(pc.match_substring_regex(lines, _CLEAN_LINE)))
+    if not len(dirty):
+        return lines, kept
+    split_lines = pc.split_pattern(lines.take(dirty), " ")
+    tok_off = _np(split_lines.offsets).astype(np.int64)  # starts at 0
+    tok = split_lines.flatten()
+    n_tok = len(tok)
+    length = _np(pc.utf8_length(tok))
+    stripped = pc.utf8_trim(tok, characters=PY_WHITESPACE)
+    punct_only = _np(pc.equal(pc.utf8_trim(stripped, characters=ODEM_PUNCTUATIONS), ""))
+    ends_punct = _np(pc.utf8_length(pc.utf8_rtrim(tok, characters=ODEM_PUNCTUATIONS))) < length
+    split = ~punct_only & (length > 1) & ends_punct
+    kept_len = np.where(split, length - 1, _np(pc.utf8_length(stripped)))
+    # two output slots per token, in order: the token (or its rest after a
+    # split) and the split-off punctuation; the pool holds the raw tokens,
+    # then the rests, then the punctuation characters
+    at = np.flatnonzero(split)
+    head = tok.take(at)
+    pool = pa.concat_arrays(
+        [tok, pc.utf8_slice_codeunits(head, 0, -1), pc.utf8_slice_codeunits(head, -1)]
+    )
+    keep_rest = ~punct_only & (kept_len >= MINIMUM_WORD_LEN)
+    slot = np.empty((n_tok, 2), dtype=np.int64)  # slot[k, 1] read only if split
+    slot[:, 0] = np.arange(n_tok)
+    slot[at, 0] = n_tok + np.arange(len(at))
+    slot[at, 1] = n_tok + len(at) + np.arange(len(at))
+    keep = np.empty((n_tok, 2), dtype=bool)
+    keep[:, 0] = keep_rest
+    keep[:, 1] = split
+    done = np.zeros(n_tok + 1, dtype=np.int64)
+    np.cumsum(keep_rest + split.astype(np.int64), out=done[1:])
+    line_off = done[tok_off]
+    joined = pc.binary_join(
+        pa.ListArray.from_arrays(
+            pa.array(line_off.astype(np.int32)), pool.take(slot.ravel()[keep.ravel()])
+        ),
+        " ",
+    )
+    kept[dirty] = np.diff(line_off) > 0
+    mask = np.zeros(len(lines), dtype=bool)
+    mask[dirty] = True
+    return pc.replace_with_mask(lines, pa.array(mask), joined), kept
+
+
+def _dehyphenate(text, media, refs, doc):
+    """Per-page word-wrap merge over a batch's extracted span sequence.
+
+    Two neighbouring text spans share a page when they belong to the same
+    document and have equal ``media_ref`` (NULL equal to NULL); a media
+    span ends the page.  A line ending in '-' that has a same-page
+    successor takes the successor's first whitespace token (its last
+    character replaced by it), and the successor keeps the rest, joined by
+    single spaces; when that rest ends in '-' the chain goes on to the
+    next line.  A '-'-ended line whose successor is blank is dropped.
+    Only the lines on such chains reach Python.
+
+    Returns the new text column, a keep mask (``None`` when no line is
+    dropped) and the positions of the merged lines.
+    """
+    m = len(text)
+    none = np.zeros(0, dtype=np.int64)
+    if m < 2:
+        return text, None, none
+    a, b = refs.slice(0, m - 1), refs.slice(1)
+    same_ref = _np(pc.or_(pc.equal(a, b).fill_null(False), pc.and_(a.is_null(), b.is_null())))
+    is_line = ~media
+    next_same = np.zeros(m, dtype=bool)
+    next_same[:-1] = same_ref & (doc[:-1] == doc[1:]) & is_line[:-1] & is_line[1:]
+    starts = np.flatnonzero(next_same & _np(pc.ends_with(text, "-").fill_null(False)))
+    if not len(starts):
+        return text, None, none
+    need = np.union1d(starts, starts + 1)
+    line = dict(zip(need.tolist(), _np(text.take(need)).tolist()))
+    new: dict[int, str] = {}
+    dropped: list[int] = []
+    merged_at: list[int] = []
+    last = -1
+    for i in starts.tolist():
+        if i <= last:
+            continue  # already rewritten as part of an earlier chain
+        cur = line[i]
+        while True:
+            nxt = line.get(i + 1)
+            if nxt is None:  # a chain past the lines pulled above
+                nxt = text[i + 1].as_py()
+            if nxt.strip():
+                head, *rest = nxt.split()
+                new[i] = cur[:-1] + head
+                merged_at.append(i)
+                cur = new[i + 1] = " ".join(rest)
+            else:
+                dropped.append(i)
+                cur = nxt
+            i += 1
+            if not (next_same[i] and cur.endswith("-")):
+                break
+        last = i
+    # chains run in ascending order, so ``new`` is keyed in position order
+    mask = np.zeros(m, dtype=bool)
+    mask[list(new)] = True
+    text = pc.replace_with_mask(text, pa.array(mask), pa.array(list(new.values()), text.type))
+    keep = None
+    if dropped:
+        keep = np.ones(m, dtype=bool)
+        keep[dropped] = False
+        text = text.filter(pa.array(keep))
+    return text, keep, np.array(merged_at, dtype=np.int64)
 
 
 def relevance_filter(doc_meta: DataFrame) -> DataFrame:

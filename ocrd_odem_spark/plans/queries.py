@@ -163,7 +163,7 @@ Q02_ORACLE = f"WITH {derive.spans_cte(DUCKDB)} {_q02_select(DUCKDB)}"
 def q03_spark(spark, sf_dir):
     # r6: arrow tier (guide §4.2) — byte-identical to hof (equality tests),
     # ~3x faster: the HOF postprocess is CodegenFallback-interpreted
-    out = pipeline.extract(docs_nested_df(spark, sf_dir), mode="arrow")
+    out = pipeline.extract(docs_nested_df(spark, sf_dir))
     return pipeline.to_flat(out)
 
 
@@ -199,9 +199,7 @@ Q03_ORACLE = (
 def q04_spark(spark, sf_dir):
     # r6: arrow tier — the hof dehyphenation fold was the sweep's most
     # expensive interpreted expression (VERDICT r5 item 2)
-    out = pipeline.extract(
-        docs_nested_df(spark, sf_dir), dehyphenate=True, mode="arrow"
-    )
+    out = pipeline.extract(docs_nested_df(spark, sf_dir), dehyphenate=True)
     return pipeline.to_flat(out)
 
 
@@ -258,7 +256,7 @@ FROM allspans"""
 
 
 def q05_spark(spark, sf_dir):
-    out = pipeline.extract(docs_nested_df(spark, sf_dir), mode="arrow")
+    out = pipeline.extract(docs_nested_df(spark, sf_dir))
     return pipeline.text_bundle(out)
 
 
@@ -278,9 +276,7 @@ GROUP BY doc_id"""
 def q06_spark(spark, sf_dir):
     # r6: arrow metrics tier — value-identical to the hof metric
     # expressions (pinned in test_r06_optimizations)
-    out = pipeline.extract(
-        docs_nested_df(spark, sf_dir), with_metrics=True, mode="arrow"
-    )
+    out = pipeline.extract(docs_nested_df(spark, sf_dir), with_metrics=True)
     return out.select(
         "doc_id", "n_pages", "n_lines_in", "n_lines_out", "n_tokens_out"
     )
@@ -940,10 +936,9 @@ def q57_checkpoint_resume_spark(spark, sf_dir):
     docs = docs_nested_df(spark, sf_dir).localCheckpoint(eager=True)
     tmp = tempfile.mkdtemp(prefix="q57_ckpt_")
     out_dir, st_dir = f"{tmp}/out", f"{tmp}/state"
-    # arrow extraction tier: byte-identical to hof (tier equality tested),
-    # and the protocol under test is the checkpoint/publish machinery, not
-    # the extraction mode — this halves the query's two-full-runs cost
-    transform = lambda d: pipeline.extract(d, mode="arrow")  # noqa: E731
+    # the default (arrow) extraction tier: the protocol under test is the
+    # checkpoint/publish machinery, not the extraction mode
+    transform = pipeline.extract
     try:
         r1 = _state.run_with_checkpoint(
             spark, docs, transform, out_dir, st_dir,
@@ -974,7 +969,7 @@ def q59_export_manifest_spark(spark, sf_dir):
     pytest (binary bytes are not SQL-comparable)."""
     from ..sources.export import export_documents
 
-    out = pipeline.extract(docs_nested_df(spark, sf_dir), mode="arrow")
+    out = pipeline.extract(docs_nested_df(spark, sf_dir))
     exported = export_documents(
         out, fmt="saf", prefix="odem_", collection="123456789/11"
     )

@@ -240,3 +240,164 @@ def test_seed_sweep_matches_oracle(spark):
         actual = _spark_result(pipeline.extract(df, dehyphenate=True))
         expected = _oracle_result(corpus, oracle.extract_document_dehyphenated)
         _assert_equal(actual, expected)
+
+
+# Characters the columnar extract must treat exactly as Python does: the
+# whitespace Python strips and splits at but a " "-only trim would keep
+# (\x1c, \x85, \xa0, U+3000, \t), the ODEM punctuation '-', '—', '⸗', '.',
+# and characters that are neither (RLM, combining e, long s).
+_ADV_CHARS = ["a", "b", "Z", "1", "ſ", "ͤ", "\x1c", "\x85", "\xa0", "　",
+              "\t", "—", "⸗", "-", ".", ",", _RLM]
+_ADV_ENDINGS = ["", "", "-", "-", "-\t", " -", "a-", "\xa0"]
+#: page runs that exercise the wrap chains: a one-token donor, a donor
+#: line ending in "-\t" (its remainder ends in '-'), a chain over four
+#: lines and a chain whose donor empties
+_ADV_CHAINS = [
+    ["Anfang wort-", "ein", "Ende hier"],
+    ["zu-", "sam-\t men-\t", "gesetzt wird", "es"],
+    ["ei-", "ne- lan-", "ge- Ket-", "te- bis", "hier"],
+    ["ab-", "cd-", "ef-", "gh"],
+    ["xy-", "zz ab-\t", "cd ef"],
+]
+
+
+def _adversarial_corpus(seed: int = 11, n_docs: int = 120):
+    """Seeded documents built from ``_ADV_CHARS`` with NULL texts, NULL
+    refs (on media and text spans), gapped offsets in shuffled input
+    order, and the wrap chains above; plus their metadata rows (RTL and
+    irrelevant docs, blacklisted labels and cover pages)."""
+    import random
+
+    rng = random.Random(seed)
+
+    def line():
+        toks = [
+            "".join(rng.choice(_ADV_CHARS) for _ in range(rng.choice((0, 1, 1, 2, 2, 3, 5))))
+            for _ in range(rng.randrange(1, 6))
+        ]
+        return " ".join(toks) + rng.choice(_ADV_ENDINGS)
+
+    docs, page_rows, doc_rows = [], [], []
+    for d in range(n_docs):
+        doc_id = f"adv{d:03d}"
+        spans = []
+
+        def add(kind, text, ref):
+            spans.append({"kind": kind, "text": text, "media_ref": ref,
+                          "offset": 3 * len(spans) + rng.randrange(3)})
+
+        refs = []
+        for p in range(rng.randrange(0, 4)):
+            ref = None if rng.random() < 0.15 else f"{p + 1:08d}"
+            refs.append(ref)
+            if rng.random() < 0.85:
+                add("media", rng.choice(["", None, "bild-"]), ref)
+            if rng.random() < 0.35:
+                lines = list(rng.choice(_ADV_CHAINS))
+            else:
+                lines = [line() for _ in range(rng.randrange(0, 7))]
+            for text in lines:
+                text = None if rng.random() < 0.06 else text
+                # a stray NULL-ref line mid-page starts a page of its own
+                add("text", text, None if rng.random() < 0.08 else ref)
+        rng.shuffle(spans)
+        docs.append({"doc_id": doc_id, "spans": spans})
+        roll = rng.random()
+        doc_rows.append({
+            "doc_id": doc_id,
+            "mets_type": "monograph" if roll > 0.1 else "periodical",
+            "pica_type": "Aa",
+            "identifiers": {},
+            "languages": ["heb"] if roll > 0.7 else (None if roll > 0.6 else ["ger"]),
+        })
+        for i, ref in enumerate(r for r in refs if r is not None):
+            roll = rng.random()
+            page_rows.append({
+                "doc_id": doc_id, "media_ref": ref, "phys_id": f"PHYS_{i}",
+                "label": "[Leerseite]" if roll < 0.15 else f"[{i}]",
+                "log_types": ["cover_back"] if 0.15 <= roll < 0.3 else ["chapter"],
+            })
+    return docs, page_rows, doc_rows
+
+
+def test_adversarial_arrow_equals_oracle_and_hof(spark):
+    """The columnar Arrow tier equals the pure-Python oracle span for span
+    on adversarial text — Python-only whitespace, punctuation-only and
+    one-character tokens, NULL texts and refs, shuffled gapped offsets,
+    wrap chains over three and more lines — with and without
+    de-hyphenation and metadata, metrics included.  It equals the HOF tier
+    on the documents without NULL refs and without whitespace other than
+    " ", where the HOF tier agrees with the oracle.  All variants are
+    collected in one action."""
+    from pyspark.sql import functions as F
+
+    from ocrd_odem_spark.schema import DOC_META_SCHEMA, DOCS_SCHEMA, PAGE_META_SCHEMA
+
+    docs, page_rows, doc_rows = _adversarial_corpus()
+    docs_df = spark.createDataFrame(docs, DOCS_SCHEMA)
+    page_meta = spark.createDataFrame(page_rows, PAGE_META_SCHEMA)
+    doc_meta = spark.createDataFrame(doc_rows, DOC_META_SCHEMA)
+    metric_cols = ["n_pages", "n_lines_in", "n_lines_out", "n_tokens_out", "n_dehyphenated"]
+
+    variants = {}
+    for dehyph in (False, True):
+        for meta in (False, True):
+            for mode in ("arrow", "hof"):
+                variants[(dehyph, meta, mode, True)] = pipeline.extract(
+                    docs_df,
+                    page_meta=page_meta if meta else None,
+                    doc_meta=doc_meta if meta else None,
+                    dehyphenate=dehyph, with_metrics=True, mode=mode,
+                )
+        variants[(dehyph, False, "arrow", False)] = pipeline.extract(
+            docs_df, dehyphenate=dehyph
+        ).select("doc_id", "spans", *[F.lit(None).cast("long").alias(c) for c in metric_cols])
+    keys = list(variants)
+    union = None
+    for k, key in enumerate(keys):
+        df = variants[key].withColumn("_variant", F.lit(k))
+        union = df if union is None else union.unionByName(df)
+    got: dict = {key: {} for key in keys}
+    for r in union.collect():
+        got[keys[r["_variant"]]][r["doc_id"]] = (
+            [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]],
+            tuple(r[c] for c in metric_cols),
+        )
+
+    # the oracle reads a NULL text line as "" (the RTL fold in _meta_oracle
+    # needs the string)
+    as_text = [
+        {**d, "spans": [{**s, "text": "" if s["text"] is None and s["kind"] == "text"
+                         else s["text"]} for s in d["spans"]]}
+        for d in docs
+    ]
+    # the HOF tier's token trim cuts at " " only, its wrap split at Java's
+    # ASCII \s, and it reads two NULL refs as different pages: compare it
+    # where none of that shows
+    hof_alike = {
+        d["doc_id"] for d in docs
+        if all(s["media_ref"] is not None for s in d["spans"])
+        and not any(ch.isspace() and ch != " " for s in d["spans"] for ch in s["text"] or "")
+    }
+    assert len(hof_alike) >= 20
+    # input text spans, counted before the blacklist drop
+    lines_in = {d["doc_id"]: sum(s["kind"] == "text" for s in d["spans"]) for d in docs}
+    for dehyph in (False, True):
+        fn = oracle.extract_document_dehyphenated if dehyph else oracle.extract_document
+        plain = _oracle_result(docs, fn)
+        meta, _ = _meta_oracle(as_text, page_rows, doc_rows, dehyph)
+        assert len(meta) < len(plain)  # some docs fail the relevance filter
+        for is_meta, expected in ((False, plain), (True, meta)):
+            arrow = got[(dehyph, is_meta, "arrow", True)]
+            _assert_equal({k: v[0] for k, v in arrow.items()}, expected)
+            for doc_id, spans in expected.items():
+                texts = [s[1] for s in spans if s[0] == "text"]
+                assert arrow[doc_id][1][:4] == (
+                    len(spans) - len(texts), lines_in[doc_id], len(texts),
+                    sum(t.count(" ") + 1 for t in texts),
+                ), doc_id
+            hof = got[(dehyph, is_meta, "hof", True)]
+            for doc_id in hof_alike & set(expected):
+                assert arrow[doc_id] == hof[doc_id], doc_id
+        bare = got[(dehyph, False, "arrow", False)]
+        _assert_equal({k: v[0] for k, v in bare.items()}, plain)
